@@ -58,11 +58,6 @@ def check_search(rows, expected: list[tuple]) -> str | None:
     return None
 
 
-def span_key(trace_id: str, s) -> tuple:
-    return (trace_id, s.span_id, s.service, s.operation, s.start, s.duration,
-            s.parent, tuple(sorted(s.tags.items())))
-
-
 def check_fetch(result: dict, truth: TruthTrace) -> str | None:
     if result.get("traceID") != truth.trace_id:
         return f"fetch: traceID {result.get('traceID')} != {truth.trace_id}"
@@ -71,7 +66,11 @@ def check_fetch(result: dict, truth: TruthTrace) -> str | None:
          d["duration"], d["parent"], tuple(sorted((d["tags"] or {}).items())))
         for d in result["spans"]
     )
-    want = sorted(span_key(truth.trace_id, s) for s in truth.spans)
+    want = sorted(
+        (truth.trace_id, s.span_id, s.service, s.operation, s.start, s.duration,
+         s.parent, tuple(sorted(s.tags.items())))
+        for s in truth.spans
+    )
     if got != want:
         return f"fetch {truth.trace_id}: {len(got)} spans, expected {len(want)}"
     return None

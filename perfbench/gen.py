@@ -62,7 +62,6 @@ class TruthSpan:
 @dataclass
 class TruthTrace:
     trace_id: str
-    day: int
     spans: list[TruthSpan] = field(default_factory=list)
 
     def root(self) -> TruthSpan:
@@ -164,7 +163,7 @@ def _gen_trace(rng: random.Random, day: int, shape: TraceShape, big: bool):
     pid_of: dict[str, str] = {}
     processes: dict[str, dict] = {}
     spans_json = []
-    truth = TruthTrace(trace_id, day)
+    truth = TruthTrace(trace_id)
     for i, (start, end, _depth, svc) in enumerate(nodes):
         if svc not in pid_of:
             pid = f"p{len(pid_of) + 1}"

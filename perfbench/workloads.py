@@ -359,7 +359,7 @@ class Curation:
             ctx.unit_end = ctx.unit_end or ctx.tracer.mark()
         return {
             "batch_s": statistics.median(sum(p) for p in passes),
-            "op_p50_ms": statistics.median(t for p in passes for t in p) * 1e3,
+            "op_p50_ms": _median([t for p in passes for t in p]) * 1e3,
             "curation_batch_s": statistics.median(sum(p) for p in passes),
             "passes": len(passes),
         }
