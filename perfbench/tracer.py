@@ -58,6 +58,7 @@ class Span:
     groups: dict[str, str] = field(default_factory=dict)  # phase -> job group
     jobs: dict[str, int] = field(default_factory=dict)  # phase -> job count
     ungrouped: dict[str, list[int]] = field(default_factory=dict)  # phase -> job ids
+    cpu: float = 0.0  # CPU seconds the call used (see ``workloads.Ctx.cpu``)
 
     @property
     def dur(self) -> float:

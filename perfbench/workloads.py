@@ -30,7 +30,13 @@ class Ctx:
     failed: int = 0
     problems: list[str] = field(default_factory=list)
     counting: bool = False  # warm-up operations are not counted
+    jvm_pid: int = 0
     unit_end: int = 0  # end of the first measured unit's spans (traced counts)
+
+    def cpu(self) -> float:
+        """CPU seconds used so far by this process and the JVM's process
+        tree (task threads, JIT and GC threads, and the Python workers)."""
+        return sum(os.times()[:2]) + tree_cpu_s(self.jvm_pid)
 
     def result(self, problem: str | None) -> None:
         if not self.counting:
@@ -41,11 +47,36 @@ class Ctx:
             self.problems.append(problem)
 
 
+def tree_cpu_s(root: int) -> float:
+    """utime + stime of ``root`` and its live descendants, plus what
+    their reaped children used."""
+    stat: dict[int, int] = {}
+    kids: dict[int, list[int]] = {}
+    for p in os.listdir("/proc"):
+        if not p.isdigit():
+            continue
+        try:
+            with open(f"/proc/{p}/stat") as f:
+                text = f.read()
+        except OSError:
+            continue
+        fields = text[text.rindex(")") + 2:].split()
+        stat[int(p)] = sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+        kids.setdefault(int(fields[1]), []).append(int(p))
+    total, todo = 0, [root]
+    while todo:
+        pid = todo.pop()
+        total += stat.get(pid, 0)
+        todo.extend(kids.get(pid, []))
+    return total / os.sysconf("SC_CLK_TCK")
+
+
 def lazy_call(ctx: Ctx, layer: str, fn, *args, op: str = "", pandas: bool = False, **kw):
     """Call a DataFrame-returning function, force its physical plan,
     then collect it (as Rows, or as a pandas frame). Returns the frame,
     the collected result and the span."""
     idx = ctx.tracer.mark()
+    c0 = ctx.cpu()
     with ctx.tracer.call(layer, op) as phase:
         with phase("construct"):
             df = fn(*args, **kw)
@@ -53,6 +84,7 @@ def lazy_call(ctx: Ctx, layer: str, fn, *args, op: str = "", pandas: bool = Fals
             df._jdf.queryExecution().executedPlan()
         with phase("execute"):
             rows = df.toPandas() if pandas else df.collect()
+    ctx.tracer.spans[idx].cpu = ctx.cpu() - c0
     return df, rows, ctx.tracer.spans[idx]
 
 
@@ -60,9 +92,11 @@ def eager_call(ctx: Ctx, layer: str, fn, *args, op: str = "", **kw):
     """Call a function that runs its Spark jobs itself (a writer, a
     point fetch): the whole call is its construct phase."""
     idx = ctx.tracer.mark()
+    c0 = ctx.cpu()
     with ctx.tracer.call(layer, op) as phase:
         with phase("construct"):
             out = fn(*args, **kw)
+    ctx.tracer.spans[idx].cpu = ctx.cpu() - c0
     return out, ctx.tracer.spans[idx]
 
 
@@ -97,6 +131,7 @@ STANDING_DAYS = range(0, 7)
 INGEST_DAY = 7
 INGEST_DATE = "2024-01-08"  # gen.EPOCH_DAY0_US + 7 days
 MIN_ROUNDS = 2  # analytics + request-mix rounds per measured cycle
+FETCH_SPANS = 12  # size of the trace each point fetch asks for
 
 
 def _request_mix(seed: int, truth: list) -> list[dict]:
@@ -122,7 +157,9 @@ def _request_mix(seed: int, truth: list) -> list[dict]:
     last: list[tuple] = []
     for req in mix:
         if req.get("fetch"):
-            req["trace"] = by_id[rng.choice(last)[0]]
+            # the returned trace nearest the typical size, so the fetch
+            # costs about the same on every seed
+            req["trace"] = by_id[min(last, key=lambda r: (abs(r[5] - FETCH_SPANS), r[0]))[0]]
         else:
             req["limit"] = 20
             req["expected"] = checks.search_truth(truth, req)
@@ -150,8 +187,10 @@ class Traces:
     def setup(self, ctx: Ctx) -> tuple[float, float]:
         raw = os.path.join(ctx.work, "raw")
         build = timed_median(lambda: self._write(ctx, raw + "/standing", "overwrite"), self.builds)
+        # warm-up: one round over the standing store (its outputs are
+        # not counted; the store build has already run the write path)
         t0 = time.perf_counter()
-        self.cycle(ctx, rounds=1)  # warm-up
+        self._round(ctx, *self._open_store(ctx), [], [], {"search": [], "fetch": []})
         return build, time.perf_counter() - t0
 
     def _write(self, ctx: Ctx, src: str, mode: str) -> None:
@@ -175,7 +214,7 @@ class Traces:
         ):
             shutil.rmtree(d)
 
-    def _analytics(self, ctx: Ctx, spans) -> list[float]:
+    def _analytics(self, ctx: Ctx, spans) -> list[tuple[float, float]]:
         from traceframe_spark.operators.analytics import (
             critical_path_breakdown,
             operation_stats,
@@ -193,13 +232,13 @@ class Traces:
         ):
             try:
                 _, rows, s = lazy_call(ctx, layer, fn, spans, op=fn.__name__, **kw)
-                times.append(s.dur)
+                times.append((s.dur, s.cpu))
                 ctx.result(check(rows, self.truth))
             except Exception as exc:  # noqa: BLE001 — a failed call is counted
                 ctx.result(f"{fn.__name__}: {type(exc).__name__}: {exc}"[:300])
         return times
 
-    def _request(self, ctx: Ctx, req: dict, spans, traces) -> tuple[str, float]:
+    def _request(self, ctx: Ctx, req: dict, spans, traces) -> tuple:
         from traceframe_spark.operators.assemble import trace_with_spans
         from traceframe_spark.operators.search import search_traces
 
@@ -207,58 +246,70 @@ class Traces:
             out, s = eager_call(ctx, "operators.assemble", trace_with_spans,
                                 traces, spans, req["trace"].trace_id, op="trace_with_spans")
             ctx.result(checks.check_fetch(out, req["trace"]))
-            return "fetch", s.dur
+            return "fetch", s
         kw = {k: v for k, v in req.items() if k != "expected"}
         _, rows, s = lazy_call(ctx, "operators.search", search_traces, spans, op="search_traces", **kw)
         ctx.result(checks.check_search(rows, req["expected"]))
-        return "search", s.dur
+        return "search", s
 
-    def cycle(self, ctx: Ctx, seconds: float = 0.0, rounds: int = MIN_ROUNDS) -> dict:
-        """Ingest the new day, then alternate the three analyses and one
-        client's closed loop of the request mix: ``rounds`` rounds,
-        then more while another fits in ``seconds`` since the ingest
-        began. The ingested day is deleted afterwards."""
+    def _open_store(self, ctx: Ctx) -> tuple:
         from traceframe_spark.sinks import read_spans
 
+        spans, _ = eager_call(ctx, "sinks.read_spans", read_spans, ctx.spark, self.spans_path)
+        return spans, ctx.spark.read.parquet(self.traces_path)
+
+    def _round(self, ctx: Ctx, spans, traces, batches: list, loops: list, lat: dict) -> None:
+        """The three analyses, then one client's closed loop of the
+        request mix. Appends (wall s, CPU s) of the analyses to
+        ``batches``, the loop's CPU seconds per request to ``loops`` and
+        each request's (wall ms, CPU ms) to ``lat``."""
+        with ctx.tracer.span("traces", "analytics"):
+            calls = self._analytics(ctx, spans)
+            batches.append((sum(d for d, _ in calls), sum(c for _, c in calls)))
+        c0 = ctx.cpu()
+        with ctx.tracer.span("traces", "closed_loop"):
+            for req in self.mix:
+                try:
+                    kind, s = self._request(ctx, req, spans, traces)
+                    lat[kind].append((s.dur * 1e3, s.cpu * 1e3))
+                except Exception as exc:  # noqa: BLE001 — a failed request is counted
+                    ctx.result(f"{req}: {type(exc).__name__}: {exc}"[:300])
+        loops.append((ctx.cpu() - c0) / len(self.mix))
+
+    def measure(self, ctx: Ctx) -> dict:
+        """Ingest the new day, then rounds of analyses and requests:
+        ``MIN_ROUNDS``, then more while another fits in ``--seconds``
+        since the ingest began. The ingested day is deleted afterwards."""
         t0 = time.perf_counter()
         with ctx.tracer.span("traces", "ingest") as ingested:
             self._write(ctx, self.ingest_dir, "append")
         store_bytes = du_bytes(self.spans_path)
-        lat: dict[str, list[float]] = {"search": [], "fetch": []}
-        batches = []
-        spans, _ = eager_call(ctx, "sinks.read_spans", read_spans, ctx.spark, self.spans_path)
-        traces = ctx.spark.read.parquet(self.traces_path)
+        lat: dict[str, list[tuple]] = {"search": [], "fetch": []}
+        batches: list[tuple] = []
+        loops: list[float] = []
+        spans, traces = self._open_store(ctx)
         last = 0.0
-        while len(batches) < rounds or time.perf_counter() - t0 + last <= seconds:
+        while len(batches) < MIN_ROUNDS or time.perf_counter() - t0 + last <= ctx.seconds:
             r0 = time.perf_counter()
-            with ctx.tracer.span("traces", "analytics"):
-                batches.append(sum(self._analytics(ctx, spans)))
-            with ctx.tracer.span("traces", "closed_loop"):
-                for req in self.mix:
-                    try:
-                        kind, dur = self._request(ctx, req, spans, traces)
-                        lat[kind].append(dur * 1e3)
-                    except Exception as exc:  # noqa: BLE001 — a failed request is counted
-                        ctx.result(f"{req}: {type(exc).__name__}: {exc}"[:300])
+            self._round(ctx, spans, traces, batches, loops, lat)
             ctx.unit_end = ctx.unit_end or ctx.tracer.mark()
             last = time.perf_counter() - r0
         self._drop_ingested_day()
+        wall = {k: [w for w, _ in v] for k, v in lat.items()}
         return {
-            "batch_s": _median(batches),
-            "op_p50_ms": _median(lat["search"]),
+            "batch_cpu_s": _median([c for _, c in batches]),
+            "op_cpu_ms": _median(loops) * 1e3,
+            "analytics_batch_s": _median([w for w, _ in batches]),
+            "search_p50_ms": _median(wall["search"]),
+            "search_p90_ms": float(np.percentile(wall["search"], 90)) if wall["search"] else 0.0,
+            "search_cpu_p50_ms": _median([c for _, c in lat["search"]]),
+            "fetch_p50_ms": _median(wall["fetch"]),
             "ingest_spans_per_s": self.ingest_spans / ingested.dur,
-            "analytics_batch_s": _median(batches),
-            "search_p50_ms": _median(lat["search"]),
-            "search_p90_ms": float(np.percentile(lat["search"], 90)) if lat["search"] else 0.0,
-            "fetch_p50_ms": _median(lat["fetch"]),
             "store_bytes_per_span": store_bytes / self.store_spans,
             "batches": len(batches),
             "searches": len(lat["search"]),
             "fetches": len(lat["fetch"]),
         }
-
-    def measure(self, ctx: Ctx) -> dict:
-        return self.cycle(ctx, ctx.seconds)
 
 
 # ---------------------------------------------------------------------------
@@ -269,7 +320,7 @@ CURATION_ROWS = ["bpe_merges", "semdedup_keep", "ann_ivfpq_adc", "dedup_index_de
 # between sf0.01 and sf0.1 (500 and 5000 documents); sf0.01's 500
 # vectors, because the DuckDB oracle of ann_ivfpq_adc takes minutes at
 # sf0.1's 2000
-CURATION_SIZES = {"n_docs": 2000, "n_vecs": 500}
+CURATION_SIZES = {"n_docs": 1000, "n_vecs": 300}
 WARMUP_SIZES = {"n_docs": 200, "n_vecs": 200}
 
 
@@ -333,14 +384,14 @@ class Curation:
         self.digests = json.loads(out.strip().splitlines()[-1])
         return self.build_s, warmup
 
-    def run_pass(self, ctx: Ctx, sf: str, check: bool = True) -> list[float]:
+    def run_pass(self, ctx: Ctx, sf: str, check: bool = True) -> list[tuple[float, float]]:
         times = []
         with ctx.tracer.span("curation", "pass"):
             for name in CURATION_ROWS:
                 try:
                     _, pdf, s = lazy_call(ctx, f"plans.{name}", self.queries[name], ctx.spark, sf,
                                           op=name, pandas=True)
-                    times.append(s.dur)
+                    times.append((s.dur, s.cpu))
                     if check:
                         got = checks.frame_digest(pdf, self.canon)
                         ctx.result(checks.check_digest(name, got, self.digests[name]))
@@ -358,9 +409,10 @@ class Curation:
             passes.append(self.run_pass(ctx, self.sf))
             ctx.unit_end = ctx.unit_end or ctx.tracer.mark()
         return {
-            "batch_s": statistics.median(sum(p) for p in passes),
-            "op_p50_ms": _median([t for p in passes for t in p]) * 1e3,
-            "curation_batch_s": statistics.median(sum(p) for p in passes),
+            "batch_cpu_s": statistics.median(sum(c for _, c in p) for p in passes),
+            "op_cpu_ms": _median([c for p in passes for _, c in p]) * 1e3,
+            "curation_batch_s": statistics.median(sum(w for w, _ in p) for p in passes),
+            "row_p50_ms": _median([w for p in passes for w, _ in p]) * 1e3,
             "passes": len(passes),
         }
 
