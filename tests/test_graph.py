@@ -164,3 +164,21 @@ def test_triangle_hub_orientation(spark):
     e = spark.createDataFrame(hub + rim, "src long, dst long")
     tri = sorted(tuple(r) for r in graph.triangles(e).collect())
     assert tri == [(0, 1, 100), (2, 3, 100)]
+
+
+def test_connected_components_releases_superseded_rounds(spark):
+    """Each round releases the checkpoint it superseded: a many-round
+    chain leaves one round's edges pinned (the returned frame's), not
+    one per round."""
+    sc = spark.sparkContext
+
+    def pinned():
+        return set(dict(sc._jsc.getPersistentRDDs()))
+
+    before = pinned()
+    edges = [(i, i + 1) for i in range(399)]
+    df = spark.createDataFrame(edges, "id_a: long, id_b: long")
+    comp = connected_components(df)
+    assert len(pinned() - before) <= 1
+    out = comp.collect()
+    assert len(out) == 400 and {r["component"] for r in out} == {0}

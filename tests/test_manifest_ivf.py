@@ -78,6 +78,40 @@ def test_manifest_protocol_preserves_probe_answers(spark, corpus, tmp_path):
     assert sa == sb
 
 
+
+def test_dotted_vec_col_names_resolve_like_f_col(spark, corpus, tmp_path):
+    """The string fast path names a column exactly as ``F.col`` does:
+    ``'payload.vec'`` is a nested field and ``'`a.b`'`` the top-level
+    column called ``a.b``. Both assign and index like the same vectors
+    in a plain top-level column."""
+    cents = sim.train_ivf_centroids(corpus, "vec_id", "embedding", n_centroids=4)
+    shaped = corpus.select(
+        "vec_id",
+        F.struct(F.col("embedding").alias("vec")).alias("payload"),
+        F.col("embedding").alias("a.b"),
+    )
+
+    def lists(df, name):
+        return sorted(
+            map(tuple, df.select(
+                "vec_id",
+                sim.ivf_assign(name, cents).alias("l"),
+                sim.ivf_probe_lists(name, cents, 2).alias("p"),
+            ).collect())
+        )
+
+    want = lists(corpus, "embedding")
+    assert lists(shaped, "payload.vec") == want
+    assert lists(shaped, "`a.b`") == want
+
+    def stored(path):
+        return sorted(map(tuple, spark.read.parquet(path).select("cid", "list_id").collect()))
+
+    flat, deep = str(tmp_path / "flat"), str(tmp_path / "deep")
+    sim.write_ivf_index(corpus, flat, "vec_id", "embedding", centroids=cents)
+    sim.write_ivf_index(shaped, deep, "vec_id", "payload.vec", centroids=cents)
+    assert stored(deep) == stored(flat)
+
 def test_manifest_append_accumulates_and_probe_snapshot_survives(
     spark, corpus, tmp_path
 ):

@@ -63,27 +63,39 @@ def service_dependencies(spans: DataFrame) -> DataFrame:
 def critical_path_breakdown(spans: DataFrame, by: str = "service") -> DataFrame:
     """Corpus-level "where does the wall-clock go": run the critical-path
     kernel over every trace and aggregate segment time by ``by``
-    (service or operationName). ``share`` is each group's fraction of
-    total critical time — the prioritized optimization list that
-    per-trace Gantt views (reference ``showSingleTrace``) can't give.
+    (service or operationName; any of the kernel's span columns).
+    ``share`` is each group's fraction of total critical time — the
+    prioritized optimization list that per-trace Gantt views (reference
+    ``showSingleTrace``) can't give.
 
-    One kernel pass + one small aggregation; the total-sum join is a
-    broadcast of a single row.
+    The kernel folds its segments per partition
+    (:func:`~traceframe_spark.operators.critical_path.critical_time_partials`),
+    so only per-key totals leave the Python workers. Those few rows go
+    to ONE partition, where the sum by ``by``, the ``sum(crit_us)``
+    window behind ``share`` and the sort all run without another
+    exchange: no broadcast of the total, no range-sort sampling job.
     """
-    from traceframe_spark.operators.critical_path import critical_path_segments
+    from pyspark.sql import Window
 
-    segs = critical_path_segments(spans)
-    per_group = segs.groupBy(by).agg(
-        F.sum("seg_duration").alias("crit_us"),
-        F.count("*").alias("n_segments"),
+    from traceframe_spark.operators.critical_path import critical_time_partials
+
+    per_group = (
+        critical_time_partials(spans, by)
+        .repartition(1)
+        .groupBy(by)
+        .agg(
+            F.sum("crit_us").alias("crit_us"),
+            # a sum of counts is never null here (every group has a
+            # partial row); coalesce keeps the column non-nullable, as
+            # count(*) over the segments was
+            F.coalesce(F.sum("n_segments"), F.lit(0)).alias("n_segments"),
+        )
     )
-    total = per_group.agg(F.sum("crit_us").alias("total_us"))
+    total = F.sum("crit_us").over(Window.partitionBy())
     return (
-        per_group.crossJoin(F.broadcast(total))
-        # try_divide: an all-zero-duration corpus has total_us 0, and under
+        # try_divide: an all-zero-duration corpus has total 0, and under
         # ANSI a plain division would abort the job (share is null then)
-        .withColumn("share", F.try_divide(F.col("crit_us"), F.col("total_us")))
-        .drop("total_us")
+        per_group.withColumn("share", F.try_divide(F.col("crit_us"), total))
         .orderBy(F.col("crit_us").desc())
     )
 

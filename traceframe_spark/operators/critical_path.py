@@ -17,9 +17,15 @@ embarrassingly parallel *across traces*. The operator hash-partitions by
 traceID, sorts each partition by traceID, and streams Arrow batches
 through ``mapInPandas`` with a group-break on traceID change (traces are
 contiguous after the sort, so only the tail trace is buffered across
-batch boundaries). This is deliberately NOT ``groupBy().applyInPandas``:
-that pays per-group pandas-frame overhead, which at millions of ~5-span
-traces dominates runtime (measured 80 s → 3 s at sf0.1 for this switch).
+batch boundaries; :func:`_trace_runs` is that loop). Two kernels consume
+the same trace runs and the same sweep: :func:`critical_path_segments`
+emits every segment, and :func:`critical_time_partials` folds them into
+per-key totals inside the worker, so a corpus breakdown ships a few rows
+per partition back from Python instead of one row per segment, and
+reads only the columns the sweep needs plus its key. This is
+deliberately NOT ``groupBy().applyInPandas``: that pays per-group
+pandas-frame overhead, which at millions of ~5-span traces dominates
+runtime (measured 80 s → 3 s at sf0.1 for this switch).
 At 100 TB this scales linearly with executor count; traceID is a
 high-cardinality hash-friendly key so skew is bounded by the largest
 single trace, not by data volume.
@@ -49,32 +55,30 @@ golden fixture has no equal timestamps).
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import LongType, StructField, StructType
 
 from traceframe_spark.schemas import CRITSEG_SCHEMA
 
-# Span columns the kernel needs; extra input columns are ignored.
-_KERNEL_COLS = [
-    "traceID",
-    "spanID",
-    "operationName",
-    "startTime",
-    "duration",
-    "processID",
-    "parent",
-    "service",
-]
-# positional indices into a kernel row tuple (same order as _KERNEL_COLS)
-_TID, _SID, _OP, _START, _DUR, _PID, _PARENT, _SVC = range(8)
+# Span columns the sweep reads, in a kernel row's positional order;
+# traceID only groups rows into traces.
+_SWEEP_COLS = ["traceID", "spanID", "startTime", "duration", "parent"]
+_TID, _SID, _START, _DUR, _PARENT = range(5)
+# ...plus the span columns each output segment carries; extra input
+# columns are ignored.
+_KERNEL_COLS = _SWEEP_COLS + ["operationName", "processID", "service"]
+_OP, _PID, _SVC = range(5, 8)
 
 
 def _sweep_rows(rows: list[tuple]) -> list[tuple[int, int, tuple]]:
-    """Sweep one trace given positional-tuple rows (``_KERNEL_COLS``
-    order); return ordered ``(seg_start, seg_duration, row)``.
+    """Sweep one trace given positional-tuple rows (``_SWEEP_COLS``
+    first, any further columns after them); return ordered
+    ``(seg_start, seg_duration, row)``.
 
     The hot kernel: tuples + integer indices instead of per-span dicts —
     at millions of spans the dict construction and string-key hashing
@@ -164,7 +168,7 @@ def critical_segments_of_trace(spans: list[dict[str, Any]]) -> list[tuple[int, i
 
 
 class _SegBuffer:
-    """Columnar accumulator for output segments, flushed per Arrow batch."""
+    """Columnar accumulator for output segments, flushed every ~10k rows."""
 
     def __init__(self) -> None:
         self.cols: dict[str, list] = {f.name: [] for f in CRITSEG_SCHEMA.fields}
@@ -193,30 +197,81 @@ class _SegBuffer:
         return len(self.cols["traceID"])
 
 
-def _sweep_stream(batches):
-    """mapInPandas kernel over ONE partition: rows arrive sorted by
-    traceID, so each trace is a contiguous run; sweep on group break.
-    Rows travel as positional tuples (``.tolist()`` converts the Arrow
-    columns to native Python values once per batch — no per-row dict,
-    no numpy-scalar arithmetic inside the sweep)."""
-    buf = _SegBuffer()
+def _trace_runs(batches, cols: list[str]):
+    """Yield each trace of ONE partition as a list of positional-tuple
+    rows (``cols`` order, traceID first). Rows arrive sorted by traceID,
+    so each trace is a contiguous run that may span Arrow batches; only
+    the open trace is held across a batch boundary. ``.tolist()``
+    converts the Arrow columns to native Python values once per batch —
+    no per-row dict, no numpy-scalar arithmetic inside the sweep."""
     open_tid: str | None = None
-    open_spans: list[tuple] = []
+    open_rows: list[tuple] = []
     for pdf in batches:
-        cols = [pdf[c].tolist() for c in _KERNEL_COLS]
-        for row in zip(*cols):
+        for row in zip(*[pdf[c].tolist() for c in cols]):
             tid = row[_TID]
             if tid != open_tid:
-                if open_spans:
-                    buf.add_trace(_sweep_rows(open_spans))
-                open_tid, open_spans = tid, []
-            open_spans.append(row)
+                if open_rows:
+                    yield open_rows
+                open_tid, open_rows = tid, []
+            open_rows.append(row)
+    if open_rows:
+        yield open_rows
+
+
+def _sweep_stream(batches):
+    """mapInPandas kernel over ONE partition: every trace's segments,
+    flushed as ~10k-row frames."""
+    buf = _SegBuffer()
+    for rows in _trace_runs(batches, _KERNEL_COLS):
+        buf.add_trace(_sweep_rows(rows))
         if len(buf) >= 10_000:
             yield buf.flush()
-    if open_spans:
-        buf.add_trace(_sweep_rows(open_spans))
     if len(buf):
         yield buf.flush()
+
+
+def _fold_stream(batches, cols: list[str], key: int):
+    """mapInPandas kernel over ONE partition: sweep every trace and fold
+    its segments into ``(key, crit_us, n_segments)`` totals, one row per
+    key value of ``row[key]`` seen in the partition."""
+    totals: dict = {}
+    for rows in _trace_runs(batches, cols):
+        for _start, dur, row in _sweep_rows(rows):
+            t = totals.get(row[key])
+            if t is None:
+                totals[row[key]] = [dur, 1]
+            else:
+                t[0] += dur
+                t[1] += 1
+    if totals:
+        yield pd.DataFrame(
+            {
+                cols[key]: list(totals),
+                "crit_us": [t[0] for t in totals.values()],
+                "n_segments": [t[1] for t in totals.values()],
+            }
+        )
+
+
+def _by_trace(
+    spans: DataFrame,
+    cols: list[str],
+    num_partitions: int | None = None,
+    pre_partitioned: bool = False,
+) -> DataFrame:
+    """The kernel input: ``cols`` of ``spans``, each traceID in one
+    partition, sorted so each trace is a contiguous run."""
+    missing = set(cols) - set(spans.columns)
+    if missing:
+        raise ValueError(f"span table missing kernel columns: {sorted(missing)}")
+    narrowed = spans.select(*cols)
+    if pre_partitioned:
+        pass
+    elif num_partitions:
+        narrowed = narrowed.repartition(num_partitions, "traceID")
+    else:
+        narrowed = narrowed.repartition("traceID")
+    return narrowed.sortWithinPartitions("traceID", "startTime", "spanID")
 
 
 def critical_path_segments(
@@ -241,18 +296,31 @@ def critical_path_segments(
     partition-local sort remains. The caller owns the invariant; spans of
     a trace split across partitions would each sweep as a partial trace.
     """
-    needed = [c for c in _KERNEL_COLS if c in spans.columns]
-    missing = set(_KERNEL_COLS) - set(needed)
-    if missing:
-        raise ValueError(f"span table missing kernel columns: {sorted(missing)}")
-    narrowed = spans.select(*_KERNEL_COLS)
-    if pre_partitioned:
-        pass
-    elif num_partitions:
-        narrowed = narrowed.repartition(num_partitions, "traceID")
-    else:
-        narrowed = narrowed.repartition("traceID")
-    return (
-        narrowed.sortWithinPartitions("traceID", "startTime", "spanID")
-        .mapInPandas(_sweep_stream, schema=CRITSEG_SCHEMA)
+    return _by_trace(spans, _KERNEL_COLS, num_partitions, pre_partitioned).mapInPandas(
+        _sweep_stream, schema=CRITSEG_SCHEMA
+    )
+
+
+def critical_time_partials(spans: DataFrame, by: str) -> DataFrame:
+    """Critical time per ``by`` value, folded inside the kernel: one
+    ``(by, crit_us, n_segments)`` row per key and partition, so summing
+    them by ``by`` gives ``critical_path_segments(spans).groupBy(by)``'s
+    ``sum(seg_duration)`` and ``count(*)`` exactly. ``by`` is one of the
+    kernel's span columns (``_KERNEL_COLS``); the kernel reads only the
+    columns the sweep needs plus ``by``, and no segment row crosses the
+    Python boundary.
+    """
+    if by not in _KERNEL_COLS:
+        raise ValueError(f"by must be one of {_KERNEL_COLS}, got {by!r}")
+    cols = _SWEEP_COLS + ([] if by in _SWEEP_COLS else [by])
+    narrowed = _by_trace(spans, cols)
+    schema = StructType(
+        [
+            StructField(by, narrowed.schema[by].dataType),
+            StructField("crit_us", LongType()),
+            StructField("n_segments", LongType(), nullable=False),
+        ]
+    )
+    return narrowed.mapInPandas(
+        partial(_fold_stream, cols=cols, key=cols.index(by)), schema=schema
     )

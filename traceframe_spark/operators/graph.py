@@ -13,7 +13,9 @@ diameter, so boilerplate chains (A≈B≈C≈…) don't degrade it the way
 naive label propagation's O(diameter) rounds would.
 
 Per-round ``localCheckpoint`` truncates lineage (iterative plans
-otherwise grow exponentially and overwhelm Catalyst); on a real
+otherwise grow exponentially and overwhelm Catalyst), and each round
+releases the checkpoint it superseded, so the loop pins one round's
+edges at a time; on a real
 cluster with a configured checkpoint dir, ``spark.sparkContext.
 setCheckpointDir`` + ``.checkpoint()`` is the fault-tolerant variant
 of the same move.
@@ -84,6 +86,11 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_nbrs.unionByName(to_center).distinct()
 
 
+def _checkpointed_rdd(df: DataFrame):
+    """The JVM RDD holding a ``localCheckpoint`` frame's blocks."""
+    return df._jdf.queryExecution().logical().rdd()
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -101,6 +108,7 @@ def connected_components(
     edges = _canonical_edges(pairs, src, dst).localCheckpoint(eager=False)
     prev: tuple | None = None
     for _ in range(max_iter):
+        superseded = edges
         # lazy checkpoint: the convergence fingerprint below is the
         # round's ONLY action — it computes every partition, so the
         # checkpoint materializes as a side effect of the same job
@@ -115,6 +123,12 @@ def connected_components(
                 F.expr("bit_xor(xxhash64(u, v))").alias("h"),
             ).first()
         )
+        # once the fingerprint has materialized this round's checkpoint
+        # (and cut its lineage), the previous round's blocks are garbage:
+        # release them, or executor storage grows with the round count.
+        # The returned frame keeps the last round's checkpoint.
+        if _checkpointed_rdd(edges).isCheckpointed():
+            _checkpointed_rdd(superseded).unpersist(False)
         if cur == prev:
             break
         prev = cur

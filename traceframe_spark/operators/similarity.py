@@ -1435,11 +1435,52 @@ def _ivf_pairs_sql(vec_sql: str, centroids: list[list[float]]) -> str:
     )
 
 
+def _name_parts(name: str) -> list[str]:
+    """Split a column name into its parts the way ``F.col`` does
+    (Spark's ``parseAttributeName``): unquoted dots separate nested
+    fields, a backticked part may hold dots, and a doubled backtick
+    inside one stands for a backtick."""
+    parts: list[str] = []
+    cur: list[str] = []
+    quoted = False
+    i = 0
+    while i < len(name):
+        ch = name[i]
+        if quoted:
+            if ch != "`":
+                cur.append(ch)
+            elif name[i + 1:i + 2] == "`":
+                cur.append("`")
+                i += 1
+            else:
+                quoted = False
+                if name[i + 1:i + 2] not in ("", "."):
+                    raise ValueError(f"syntax error in attribute name: {name!r}")
+        elif ch == "`":
+            if cur:
+                raise ValueError(f"syntax error in attribute name: {name!r}")
+            quoted = True
+        elif ch == ".":
+            if name[i - 1:i] in ("", ".") or i == len(name) - 1:
+                raise ValueError(f"syntax error in attribute name: {name!r}")
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    if quoted:
+        raise ValueError(f"syntax error in attribute name: {name!r}")
+    parts.append("".join(cur))
+    return parts
+
+
 def _vec_sql(vec: "Column | str") -> str | None:
-    """Backtick-quoted SQL fragment for a plain column name, None for a
-    Column object (callers keep the Column-built tree for those)."""
+    """SQL fragment naming the column ``F.col(vec)`` names, each part
+    backtick-quoted (so ``'payload.vec'`` is the nested field and
+    ``'`a.b`'`` the top-level column ``a.b``); None for a Column object
+    (callers keep the Column-built tree for those)."""
     if isinstance(vec, str):
-        return "`" + vec.replace("`", "``") + "`"
+        return ".".join("`" + p.replace("`", "``") + "`" for p in _name_parts(vec))
     return None
 
 

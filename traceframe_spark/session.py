@@ -16,6 +16,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Whole-stage codegen classes cached per JVM (Spark's default: 100). One
+# round of the trace analyses and searches, or one curation pass,
+# generates more distinct classes than that, so identical queries evicted
+# each other and every repeat recompiled 100-270 classes with Janino.
+CODEGEN_CACHE_ENTRIES = 2000
+
 
 def local_frame(spark: SparkSession, rows, schema: str, slices: int | None = None):
     """A small driver-local relation as a DataFrame with a BOUNDED
@@ -146,6 +152,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # static: only a new session's JVM picks it up
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
